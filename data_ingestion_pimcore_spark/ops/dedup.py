@@ -241,7 +241,9 @@ def minhash_signatures(d: DataFrame) -> DataFrame:
             sig_rows = []
             for cell in col:
                 if pre_shingled:
-                    grams = cell
+                    # a NULL array aggregates like an empty one: null
+                    # sigs, md5('') bands
+                    grams = cell if cell is not None else []
                 elif cell is None:
                     grams = [None]
                 else:

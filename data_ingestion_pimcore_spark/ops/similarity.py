@@ -761,16 +761,16 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    # r13: the broadcast hint on the vector attach is GATED on a
-    # metadata-only row-count bound (same pattern as graph.py's
-    # _bcast_nodes — parquet footer count, no data scan). r12 forced
-    # F.broadcast unconditionally, which at corpus scale collects the
-    # FULL embeddings table to the driver — exactly the §3.1 "small
-    # side must fit" failure. Below the gate the hint keeps the
-    # candidate side unshuffled; above it the attach degrades to the
-    # planner's choice (shuffle join on vec_id — the standard shape for
-    # a corpus-sized build side).
-    n_vecs = load(spark, sf_dir, "embeddings").count()
+    # r13: the broadcast hint on the vector attach is GATED on the
+    # embeddings row count — one eager count() job over ``e``, which
+    # reads no columns (column pruning leaves a row-count-only scan).
+    # r12 forced F.broadcast unconditionally, which at corpus scale
+    # collects the FULL embeddings table to the driver — exactly the
+    # §3.1 "small side must fit" failure. Below the gate the hint keeps
+    # the candidate side unshuffled; above it the attach degrades to
+    # the planner's choice (shuffle join on vec_id — the standard shape
+    # for a corpus-sized build side).
+    n_vecs = e.count()
     ex = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("xv"))
     ey = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("yv"))
 

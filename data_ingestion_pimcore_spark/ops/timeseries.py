@@ -242,6 +242,31 @@ _STREAM_STATE_PARTITIONS = "8"
 _SHM_REPLAY_LIMIT_BYTES = 1 << 30
 
 
+def _events_bytes(sf_dir: str) -> int:
+    """On-disk size of ``events.parquet`` under ``sf_dir`` — a single
+    file or a directory of parts. An unknown size (missing path, an
+    unreadable directory) reads as over _SHM_REPLAY_LIMIT_BYTES, so
+    the tmpfs gate stays off RAM."""
+    import os
+
+    def _raise(err: OSError) -> None:
+        raise err
+
+    ev_root = os.path.join(sf_dir.rstrip("/"), "events.parquet")
+    try:
+        if os.path.isfile(ev_root):
+            return os.path.getsize(ev_root)
+        if not os.path.isdir(ev_root):
+            return _SHM_REPLAY_LIMIT_BYTES + 1
+        return sum(
+            os.path.getsize(os.path.join(dirpath, f))
+            for dirpath, _dirs, files in os.walk(ev_root, onerror=_raise)
+            for f in files
+        )
+    except OSError:
+        return _SHM_REPLAY_LIMIT_BYTES + 1
+
+
 def _drain(spark: SparkSession, df: DataFrame, prefix: str, mode: str) -> str:
     """Run a streaming DataFrame to completion (AvailableNow) into a
     memory sink; returns the sink table name. Pins shuffle/state
@@ -1291,18 +1316,10 @@ def ts_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     # RAM-backed scratch must not grow with the corpus. The gate costs
     # nothing locally (the r12 scratch-medium sweep measured the medium
     # flat at bench sizes); above it everything rides default disk tmp.
-    events_bytes = 0
-    try:
-        ev_root = os.path.join(sf_dir.rstrip("/"), "events.parquet")
-        for dirpath, _dirs, files in os.walk(ev_root):
-            events_bytes += sum(
-                os.path.getsize(os.path.join(dirpath, f)) for f in files
-            )
-    except OSError:
-        events_bytes = _SHM_REPLAY_LIMIT_BYTES + 1  # unknown size: stay off RAM
     tmp_root = (
         "/dev/shm"
-        if os.path.isdir("/dev/shm") and events_bytes <= _SHM_REPLAY_LIMIT_BYTES
+        if os.path.isdir("/dev/shm")
+        and _events_bytes(sf_dir) <= _SHM_REPLAY_LIMIT_BYTES
         else None
     )
     root = tempfile.mkdtemp(prefix="fb_upsert_", dir=tmp_root)

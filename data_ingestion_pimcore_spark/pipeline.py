@@ -23,8 +23,6 @@ path's re-send bug (SURVEY §2.1 "Known reference bugs").
 from __future__ import annotations
 
 import hashlib
-import threading
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pandas as pd
@@ -49,50 +47,11 @@ from .sink import Transport, send_chunk_with_retry
 from .state import IngestionStateStore, version_for
 
 
-def _chunk_payloads(
-    pending: DataFrame, record_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """(chunk_number, n_records, checksum, payload-JSON) per chunk.
-
-    ``applyInPandas`` hands each chunk to one executor task as a whole
-    Arrow group (bounded by the chunk size contract, ≤4000 records /
-    the byte budget), which serializes it canonically and hashes it —
-    the expensive Python work, parallel across chunks.
-    """
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        # Per-column tolist with null-fixing ONLY for columns that
-        # actually contain nulls: a whole-frame astype(object) +
-        # where(notna) would copy every value into object cells per
-        # chunk (~40% of payload-build CPU); numeric/string columns
-        # without nulls convert in one C call instead.
-        columns = _record_columns(pdf, record_cols)
-        # dict(zip(...)) over column lists ≈ 4x pandas to_dict("records")
-        # on 4000-row chunks — this runs once per chunk in the hot path.
-        records = [dict(zip(record_cols, row)) for row in zip(*columns)]
-        blob = canonical_dumps(records)
-        # Payload stays BYTES end-to-end (Arrow binary → driver → wire):
-        # a string column would pay a UTF-8 validate/decode on the
-        # sequential driver edge for every chunk.
-        return pd.DataFrame(
-            {
-                CHUNK_COL: [int(pdf[CHUNK_COL].iloc[0])],
-                "n_records": [len(records)],
-                "checksum": [hashlib.sha256(blob).hexdigest()],
-                "payload": [blob],
-            }
-        )
-
-    return pending.groupBy(CHUNK_COL).applyInPandas(
-        build,
-        schema=f"{CHUNK_COL} long, n_records long, checksum string, payload binary",
-    )
-
-
 def _record_columns(pdf: pd.DataFrame, record_cols: list[str]) -> list[list]:
-    """Per-column tolist with null-fixing only where needed (see
-    _chunk_payloads.build)."""
+    """Per-column tolist with null-fixing ONLY for columns that actually
+    contain nulls: a whole-frame astype(object) + where(notna) would
+    copy every value into object cells per chunk (~40% of payload-build
+    CPU); numeric/string columns without nulls convert in one C call."""
     columns = []
     for c in record_cols:
         s = pdf[c]
@@ -168,8 +127,13 @@ def _chunk_payloads_local(
             g = pd.concat(frames) if len(frames) > 1 else frames[0]
             g = g.sort_values(order_cols, kind="mergesort")
             columns = _record_columns(g, record_cols)
+            # dict(zip(...)) over column lists ≈ 4x pandas
+            # to_dict("records") on 4000-row chunks.
             records = [dict(zip(record_cols, row)) for row in zip(*columns)]
             blob = canonical_dumps(records)
+            # Payload stays BYTES end-to-end (Arrow binary → driver →
+            # wire): a string column would pay a UTF-8 validate/decode
+            # on the sequential driver edge for every chunk.
             out.append(
                 (c, len(records), hashlib.sha256(blob).hexdigest(), blob)
             )
@@ -623,8 +587,46 @@ class IngestSummary:
 _RESUME_RN = "__resume_rn"
 
 # Drain-layout granularity: chunks per toLocalIterator partition (one
-# drain job each). See the sizing comment at the layout site in ingest().
+# drain job each). See _drain_parts.
 CHUNKS_PER_DRAIN_PART = 16
+
+
+def _drain_parts(n_chunks: int) -> int:
+    """Partition count of the ascending drain layout for ``n_chunks``.
+
+    toLocalIterator schedules ONE job per partition — smaller
+    partitions mean each drain job computes LESS before the sequential
+    emit can start, pipelining compute under the emit, but each job
+    pays scheduling overhead. ~16 chunks/partition is the measured
+    optimum (quiet-machine interleaved A/B at sf0.1, medians: 64/part
+    161k, 16/part 178k, 8/part 176k, 4/part 164k rec/s — the original
+    ~64 sizing dated from when every drain job re-evaluated a
+    Python-RDD offsets broadcast, since fixed). Ascending partitions
+    keep global order for the sequential emit, bound driver memory per
+    prefetched partition (16 × payload cap), and scale the job count
+    with the data up to the 256 cap. Chunk-count estimates fall out of
+    the chunker's own counts pass (stats_out) — no extra count() job
+    over the source, which for JSON/CSV/Excel ingests would be a second
+    full parse pass.
+    """
+    return max(2, min(256, -(-n_chunks // CHUNKS_PER_DRAIN_PART)))
+
+
+def _count_mode_payloads(
+    pending: DataFrame, record_cols: list[str], chunk_size: int, n_rows: int
+) -> DataFrame:
+    """Payloads of count-mode chunks numbered from 0 over ``n_rows``
+    rows, laid out for the ordered drain (deliver with
+    ``merge_fragments=True``). ``pending`` is ``_chunked`` output,
+    possibly resume-filtered. Fused builder: complete chunks serialize
+    in the task that already holds their rows; the only remaining
+    exchange is the drain-layout one, which also co-locates
+    partition-border fragments."""
+    n_chunks = -(-n_rows // chunk_size)
+    return _chunk_payloads_fused(
+        pending, record_cols, _RESUME_RN, chunk_size, n_rows,
+        _drain_parts(n_chunks),
+    )
 
 
 def _chunked(
@@ -652,103 +654,6 @@ def _chunked(
         stats_out=stats_out,
         rn_col=rn_col,
     )
-
-
-_MAX_BYTES_KEY = "spark.sql.execution.arrow.maxBytesPerBatch"
-_MAX_RECS_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
-_ARROW_CONF_LOCK = threading.Lock()
-_ARROW_CONF_STATE: dict = {}
-
-
-@contextmanager
-def _ingest_arrow_conf(spark: SparkSession, request: IngestRequest):
-    """Arrow-input tuning for the count-mode drain window.
-
-    Spark's JVM→Python Arrow writer enforces
-    ``spark.sql.execution.arrow.maxBytesPerBatch`` by calling
-    ``ArrowWriter.sizeInBytes()`` — a recursive walk of every vector's
-    buffers — after EVERY row (BatchedPythonArrowInput), the hottest
-    JVM path of the payload-build stage in a JFR profile (~3 core-s per
-    sf0.1 ingest, linear in rows). The Int.MaxValue sentinel disables
-    the walk entirely. That trade is safe HERE because count-mode
-    batches are simultaneously re-capped to the chunk size, so a batch
-    is never bigger than one chunk payload — memory the drain
-    materializes per chunk anyway. It would NOT be safe globally:
-    blob-heavy stages (multimodal) rely on the byte cap. Byte-mode
-    ingests keep the default cap too (records there may be large — the
-    byte budget, not a record count, is the contract).
-
-    Runtime confs are read per-execution, so the try/finally window
-    covers exactly this ingestion's drain jobs. Concurrent ingestions
-    reference-count the window (module lock) — BOTH modes register, so
-    the byte-cap sentinel is only ever set while NO byte-mode drain is
-    active in the session (a byte-mode ingest sharing the window would
-    otherwise silently lose the cap it relies on). The sentinel is
-    applied by the first count-mode drain in, dropped the moment a
-    byte-mode drain enters, re-applied when the last byte-mode drain
-    leaves, and fully restored by the last drain out. The record cap
-    uses the SMALLEST active chunk size — caps only tighten, never
-    loosen, under concurrency.
-    """
-    conf = spark.conf
-    mode = "count" if request.chunk_size_by_records is not None else "byte"
-    with _ARROW_CONF_LOCK:
-        st = _ARROW_CONF_STATE
-        if not st:
-            old = {}
-            for k in (_MAX_BYTES_KEY, _MAX_RECS_KEY):
-                try:
-                    old[k] = conf.get(k)
-                except Exception:
-                    old[k] = None
-            st.update(saved=old, count=0, byte=0, cap=None)
-        st[mode] += 1
-        if mode == "count":
-            cap = min(10_000, request.chunk_size_by_records)
-            if st["cap"] is None or cap < st["cap"]:
-                st["cap"] = cap
-        _arrow_conf_sync(conf, st)
-    try:
-        yield
-    finally:
-        with _ARROW_CONF_LOCK:
-            st = _ARROW_CONF_STATE
-            st[mode] -= 1
-            if st["count"] == 0 and st["byte"] == 0:
-                for k, v in st["saved"].items():
-                    if v is None:
-                        conf.unset(k)
-                    else:
-                        conf.set(k, v)
-                st.clear()
-            else:
-                _arrow_conf_sync(conf, st)
-
-
-def _arrow_conf_sync(conf, st: dict) -> None:
-    """Reconcile the Arrow batch caps with the active-drain census.
-
-    Called with ``_ARROW_CONF_LOCK`` held and ``st`` initialized. The
-    byte-size sentinel is safe only while every active drain is
-    count-mode (each batch then re-capped to a chunk's record count);
-    one byte-mode entrant and the saved cap comes straight back.
-    """
-
-    def _restore(key: str) -> None:
-        v = st["saved"][key]
-        if v is None:
-            conf.unset(key)
-        else:
-            conf.set(key, v)
-
-    if st["count"] > 0 and st["byte"] == 0:
-        conf.set(_MAX_BYTES_KEY, "2147483647")
-    else:
-        _restore(_MAX_BYTES_KEY)
-    if st["count"] > 0:
-        conf.set(_MAX_RECS_KEY, str(st["cap"]))
-    else:
-        _restore(_MAX_RECS_KEY)
 
 
 def ingest(
@@ -788,63 +693,40 @@ def ingest(
         # K3: skip already-ACKed chunks — a pushed-down predicate, so
         # re-runs never recompute completed work.
         pending = chunked.where(F.col(CHUNK_COL) > last_chunk)
-    # Canonicalization + checksumming run IN EXECUTORS (one Arrow group
-    # per chunk), in parallel across all cores; the driver only streams
+    # Canonicalization + checksumming run IN EXECUTORS, in parallel
+    # across all cores; the driver only streams
     # the finished payloads in chunk order and performs the (contract-
     # mandated sequential, CV2) network emit. Payload bytes are the
     # canonical JSON the consumer re-hashes, so producer and consumer
     # share one canonicalizer end to end.
-    if request.chunk_size_by_records is not None:
-        # Count mode: fused builder — complete chunks serialize in the
-        # task that already holds their rows; the only remaining
-        # exchange is the drain-layout one, which also merges
-        # partition-border fragments. Output is already range-
-        # partitioned and chunk-sorted for the sequential emit.
-        est_chunks = -(-chunk_stats["n_rows"] // request.chunk_size_by_records)
-        n_parts = max(2, min(256, -(-est_chunks // CHUNKS_PER_DRAIN_PART)))
-        payloads = _chunk_payloads_fused(
+    count_mode = request.chunk_size_by_records is not None
+    if count_mode:
+        payloads = _count_mode_payloads(
             pending,
             record_cols,
-            _RESUME_RN,
             request.chunk_size_by_records,
             chunk_stats["n_rows"],
-            n_parts,
         )
     else:
         # Byte mode: one hash exchange on chunk_number co-locates each
         # chunk's rows (the v2 byte chunker no longer shuffles by epoch
         # itself — its assignment pass is a broadcast probe), then
-        # payloads build in place.
+        # payloads build in place. The drain layout is the
+        # closed-formula sentinel exchange (chunker.ascending_chunk_layout),
+        # not repartitionByRange — RangePartitioner's sampling pass
+        # would re-execute the payload build once per ingest. NOTE
+        # coalesce() would NOT preserve order here — under AQE it
+        # merges non-consecutive shuffle partitions.
         drop = [_RESUME_RN] if request.record_resume else []
         payloads = _chunk_payloads_local(
             pending.drop(*drop).repartition(F.col(CHUNK_COL)),
             record_cols,
             order_cols,
         )
-    # Drain layout: toLocalIterator schedules ONE job per partition —
-    # smaller partitions mean each drain job computes LESS before the
-    # sequential emit can start, pipelining compute under the emit, but
-    # each job pays scheduling overhead. ~16 chunks/partition is the
-    # measured optimum (quiet-machine interleaved A/B at sf0.1, medians:
-    # 64/part 161k, 16/part 178k, 8/part 176k, 4/part 164k rec/s — the
-    # original ~64 sizing dated from when every drain job re-evaluated a
-    # Python-RDD offsets broadcast, since fixed). Ascending partitions
-    # keep global order for the sequential emit, bound driver memory per
-    # prefetched partition (16 × payload cap), and scale the job count
-    # with the data up to the 256 cap. The exchange is the
-    # closed-formula sentinel layout (chunker.ascending_chunk_layout),
-    # not repartitionByRange — RangePartitioner's sampling pass would
-    # re-execute the payload build once per ingest. NOTE coalesce()
-    # would NOT preserve order here — under AQE it merges
-    # non-consecutive shuffle partitions.
-    # Chunk-count estimates fall out of the chunker's own counts pass
-    # (stats_out) — no extra count() job over the source, which for
-    # JSON/CSV/Excel ingests would be a second full parse pass. The
-    # fused count-mode path already produced this layout.
-    if request.chunk_size_by_records is None:
         est_chunks = chunk_stats["n_chunks"]
-        n_parts = max(2, min(256, -(-est_chunks // CHUNKS_PER_DRAIN_PART)))
-        payloads = ascending_chunk_layout(payloads, est_chunks, n_parts)
+        payloads = ascending_chunk_layout(
+            payloads, est_chunks, _drain_parts(est_chunks)
+        )
     # NOTE a background persist+count "warm" of the payload frame was
     # A/B'd here (round 7) and removed: the drain's FIRST job already
     # executes the full upstream (scan + ordering exchange + fused
@@ -852,16 +734,15 @@ def ingest(
     # every partition's expensive work is parallel and complete by the
     # first row — the background materialization only duplicated it
     # (interleaved A/B at sf0.1: statistically flat, 5.2-5.8 s both).
-    with _ingest_arrow_conf(spark, request):
-        chunks_sent, total_records = deliver_payloads(
-            payloads,
-            ingestion_id,
-            state,
-            transport,
-            total_records,
-            mark_last=True,
-            merge_fragments=request.chunk_size_by_records is not None,
-        )
+    chunks_sent, total_records = deliver_payloads(
+        payloads,
+        ingestion_id,
+        state,
+        transport,
+        total_records,
+        mark_last=True,
+        merge_fragments=count_mode,
+    )
 
     # K4: completion handshake; mark COMPLETED only after consumer ACK.
     last = state.get_last_chunk(ingestion_id)

@@ -26,7 +26,9 @@ completion is signaled by the K4 event when the query terminates
 (AvailableNow) — the consumer contract (CV5) keys on the event, not
 the flag.
 
-Scale: each micro-batch's canonicalization/checksumming fans out
+Scale: each micro-batch goes through batch mode's count-mode payload
+path (``pipeline._count_mode_payloads``: the fused builder and the
+ascending drain layout), so its canonicalization/checksumming fans out
 across executors exactly like batch mode; ``maxFilesPerTrigger``
 bounds batch size (back-pressure); many ingestions run as many
 concurrent queries.
@@ -39,10 +41,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .chunker import CHUNK_COL, assign_chunks_by_count
+from .chunker import CHUNK_COL
 from .config import IngestRequest
 from .integrity import build_file_id, build_ingestion_id
-from .pipeline import IngestSummary, _chunk_payloads, deliver_payloads
+from .pipeline import (
+    IngestSummary,
+    _chunked,
+    _count_mode_payloads,
+    deliver_payloads,
+)
 from .sink import Transport
 from .state import IngestionStateStore, version_for
 
@@ -101,12 +108,21 @@ def stream_ingest(
         # read is the serialization point; micro-batches are sequential.
         base = state.get_last_chunk(ingestion_id) + 1
         totals = state.get_total_records(ingestion_id)
-        chunked = assign_chunks_by_count(batch_df, order_cols, size).withColumn(
-            CHUNK_COL, F.col(CHUNK_COL) + F.lit(base).cast("long")
-        )
-        payloads = _chunk_payloads(chunked, record_cols, order_cols).orderBy(CHUNK_COL)
+        stats: dict = {}
+        chunked = _chunked(batch_df, request, order_cols, stats_out=stats)
+        # Chunks build numbered from 0 (the fused builder sizes them by
+        # that formula); the shift keeps the drain layout's ascent.
+        payloads = _count_mode_payloads(
+            chunked, record_cols, size, stats["n_rows"]
+        ).withColumn(CHUNK_COL, F.col(CHUNK_COL) + F.lit(base).cast("long"))
         deliver_payloads(
-            payloads, ingestion_id, state, transport, totals, mark_last=False
+            payloads,
+            ingestion_id,
+            state,
+            transport,
+            totals,
+            mark_last=False,
+            merge_fragments=True,
         )
 
     q = (

@@ -1013,3 +1013,35 @@ def test_audience_overlap_hand_fixture(spark):
     assert out[("F", "O")]["n_both"] == 2 and out[("F", "O")]["jaccard"] == 0.5
     assert out[("F", "P")]["n_both"] == 1 and abs(out[("F", "P")]["jaccard"] - 1 / 3) < 1e-12
     assert out[("O", "P")]["n_both"] == 1 and abs(out[("O", "P")]["jaccard"] - 1 / 3) < 1e-12
+
+
+def test_replay_gate_sizes_events_file_and_fails_safe(tmp_path, monkeypatch):
+    """The foreachBatch upsert's tmpfs gate sizes events.parquet as a
+    single file and as a directory of parts; a missing path or a walk
+    error reads as over the limit (stay off RAM)."""
+    import os
+
+    from data_ingestion_pimcore_spark.ops import timeseries as ts
+
+    over = ts._SHM_REPLAY_LIMIT_BYTES + 1
+    single = tmp_path / "single"
+    single.mkdir()
+    (single / "events.parquet").write_bytes(b"x" * 1234)
+    assert ts._events_bytes(str(single)) == 1234
+
+    parts = tmp_path / "parts" / "events.parquet"
+    (parts / "sub").mkdir(parents=True)
+    (parts / "part-0.parquet").write_bytes(b"x" * 100)
+    (parts / "sub" / "part-1.parquet").write_bytes(b"x" * 23)
+    assert ts._events_bytes(str(tmp_path / "parts")) == 123
+
+    assert ts._events_bytes(str(tmp_path / "missing")) == over
+
+    def failing_walk(top, onerror=None, **_kw):
+        err = PermissionError(13, "denied", str(top))
+        if onerror is not None:
+            onerror(err)
+        return iter(())
+
+    monkeypatch.setattr(os, "walk", failing_walk)
+    assert ts._events_bytes(str(tmp_path / "parts")) == over

@@ -340,17 +340,19 @@ def test_warm_ingest_runs(spark):
     warm_ingest(spark)
 
 
-def test_fused_payloads_equal_groupby_payloads(spark):
-    """The fused builder (complete-in-task + fragment merge) must
-    produce byte-identical payloads and checksums to the shuffle-based
-    groupBy builder for every chunk, across chunk sizes that do and
-    don't divide the row count (fragment-heavy cases included)."""
+def test_fused_payloads_equal_local_payloads(spark):
+    """The fused count-mode builder (complete-in-task + fragment merge)
+    must produce byte-identical payloads and checksums to the byte-mode
+    builder fed hash-co-located chunks, for every chunk, across chunk
+    sizes that do and don't divide the row count (fragment-heavy cases
+    included)."""
     from pyspark.sql import functions as F
 
+    from data_ingestion_pimcore_spark.chunker import CHUNK_COL
     from data_ingestion_pimcore_spark.pipeline import (
         _RESUME_RN,
-        _chunk_payloads,
         _chunk_payloads_fused,
+        _chunk_payloads_local,
         _chunked,
         _merge_fragment_rows,
     )
@@ -387,13 +389,16 @@ def test_fused_payloads_equal_groupby_payloads(spark):
                 fused.orderBy("chunk_number", "first_rn").collect()
             )
         }
-        grp = _chunk_payloads(
-            chunked.drop(_RESUME_RN), li.columns, order
+        local = _chunk_payloads_local(
+            chunked.drop(_RESUME_RN).repartition(F.col(CHUNK_COL)),
+            li.columns,
+            order,
         ).collect()
         want = {
             r["chunk_number"]: (r["n_records"], r["checksum"], bytes(r["payload"]))
-            for r in grp
+            for r in local
         }
+        assert len(want) == -(-2500 // chunk_size), f"chunk_size={chunk_size}"
         assert got == want, f"chunk_size={chunk_size}"
 
 
@@ -740,71 +745,6 @@ def test_ts_column_strings_byte_identical_to_isoformat():
     )
     assert _ts_column_strings(tz) is None
     assert _ts_column_strings(pd.Series([1, 2])) is None
-
-
-def test_ingest_arrow_conf_window_refcounted(spark):
-    """The drain-window Arrow conf must nest across concurrent
-    ingestions: set by the first in, restored only by the last out,
-    record cap tightening to the smallest active chunk size."""
-    from data_ingestion_pimcore_spark.config import IngestRequest
-    from data_ingestion_pimcore_spark.pipeline import (
-        _MAX_BYTES_KEY,
-        _MAX_RECS_KEY,
-        _ingest_arrow_conf,
-    )
-
-    before_bytes = spark.conf.get(_MAX_BYTES_KEY)
-    before_recs = spark.conf.get(_MAX_RECS_KEY)
-    r1 = IngestRequest(
-        file_path="x", file_type="parquet", chunk_size_by_records=4000,
-        order_cols=("a",),
-    )
-    r2 = IngestRequest(
-        file_path="y", file_type="parquet", chunk_size_by_records=2000,
-        order_cols=("a",),
-    )
-    with _ingest_arrow_conf(spark, r1):
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-        assert spark.conf.get(_MAX_RECS_KEY) == "4000"
-        with _ingest_arrow_conf(spark, r2):
-            assert spark.conf.get(_MAX_RECS_KEY) == "2000"
-        # inner exit must NOT restore while the outer is active
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-    assert spark.conf.get(_MAX_RECS_KEY) == before_recs
-
-    # byte-mode ingests leave the confs alone when running solo ...
-    rb = IngestRequest(
-        file_path="z", file_type="parquet",
-        chunk_size_by_memory=1024, order_cols=("a",),
-    )
-    with _ingest_arrow_conf(spark, rb):
-        assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-        assert spark.conf.get(_MAX_RECS_KEY) == before_recs
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-
-    # ... and SUPPRESS the byte-cap sentinel while sharing the window
-    # with a count-mode drain: a blob-heavy byte-mode ingest must never
-    # silently lose the byte cap it relies on (round-9 ADVICE).
-    with _ingest_arrow_conf(spark, r1):
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-        with _ingest_arrow_conf(spark, rb):
-            # byte-mode entrant drops the sentinel immediately ...
-            assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-            # ... but the count-mode record cap stays (caps only tighten)
-            assert spark.conf.get(_MAX_RECS_KEY) == "4000"
-        # last byte-mode exit re-applies the sentinel for the survivor
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-    assert spark.conf.get(_MAX_RECS_KEY) == before_recs
-
-    # byte-mode entering FIRST blocks the sentinel for a later count-mode
-    with _ingest_arrow_conf(spark, rb):
-        with _ingest_arrow_conf(spark, r2):
-            assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-            assert spark.conf.get(_MAX_RECS_KEY) == "2000"
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-    assert spark.conf.get(_MAX_RECS_KEY) == before_recs
 
 
 # ---------------------------- pipelined (windowed) consumer validation
